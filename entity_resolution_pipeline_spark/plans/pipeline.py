@@ -7,16 +7,21 @@ TableIO plus per-partition lineage rows (blocking-key range, pair count,
 score histogram — the north-star audit payload) to the audit log; the runner
 resumes from the last committed stage (run_pipeline.py:884-893 semantics).
 
-Shuffle budget per full run: 1 (pair self-join on salted key) + 1 (pair
-group-agg) + 1 (top-N window) + 2 per CC round + metric aggs. Extraction and
-blocking-key derivation are narrow.
+Audit counters are observed on each stage's write job
+(``observe.run_observed``), not counted by re-reading the committed table;
+only the blocks stage runs one extra aggregate (distinct keys cannot be
+observed). Shuffle budget per full run:
+1 (pair self-join on salted key) + 1 (pair group-agg) + 1 (top-N window) +
+1 (edge dedup before clustering) + the star rounds' exchanges (none when
+the match graph fits the driver finish, see operators/clustering.py) + the
+blocks key aggregate. Extraction and blocking-key derivation are narrow.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.blocking import blocking_table, key_stats, salted_blocking_table
@@ -27,6 +32,7 @@ from ..operators.scoring import (
     release_persisted, score_pairs_two_phase,
 )
 from ..functions.normalize import extract_text_udf
+from ..observe import run_observed
 from ..sources.tableio import TableIO
 
 
@@ -140,13 +146,26 @@ def stage_clusters(scored: DataFrame, extracted: DataFrame, cfg: PipelineConfig,
     return assign_clusters(extracted.select("url"), edges, **cc_kwargs)
 
 
-def _score_histogram(scored: DataFrame, buckets: int = 10) -> list[dict]:
-    hist = (
-        scored.select(F.least(F.floor(F.col("p_match") * buckets), F.lit(buckets - 1))
-                      .alias("bucket"))
-        .groupBy("bucket").count().orderBy("bucket").collect()
-    )
-    return [{"bucket": int(r["bucket"]), "count": int(r["count"])} for r in hist]
+def _observed_write(io: TableIO, name: str, df: DataFrame,
+                    **metrics) -> dict[str, int]:
+    """Write + commit ``df`` as stage ``name`` and return the aggregate
+    ``metrics`` (name → Column), observed by the write job itself instead
+    of re-reading the committed table."""
+    _, observed = run_observed(
+        df, lambda d: io.write(name, d, meta={"stage": name}), **metrics)
+    return {k: int(v or 0) for k, v in observed.items()}
+
+
+_HIST_BUCKETS = 10
+
+
+def _score_buckets() -> dict[str, Column]:
+    """Ten ``p_match`` decile counts, one aggregate each (observed metrics
+    cannot group)."""
+    bucket = F.least(F.floor(F.col("p_match") * _HIST_BUCKETS),
+                     F.lit(_HIST_BUCKETS - 1))
+    return {f"b{b}": F.sum((bucket == b).cast("long"))
+            for b in range(_HIST_BUCKETS)}
 
 
 def run_pipeline(
@@ -172,12 +191,14 @@ def run_pipeline(
     def committed(name: str) -> bool:
         return resume and io.is_committed(name)
 
+    n_docs = None
     if not committed("extract"):
-        extracted = stage_extract(pages)
-        io.write("extract", extracted, meta={"stage": "extract"})
-        io.append_audit([{"stage": "extract", "rows": io.read("extract").count()}])
+        n_docs = _observed_write(io, "extract", stage_extract(pages),
+                                 rows=F.count(F.lit(1)))["rows"]
+        io.append_audit([{"stage": "extract", "rows": n_docs}])
     extracted = io.read("extract")
-    n_docs = extracted.count()
+    if n_docs is None:
+        n_docs = extracted.count()
 
     if not committed("blocks"):
         salted = stage_blocks(extracted, cfg, n_docs=n_docs)
@@ -197,24 +218,26 @@ def run_pipeline(
 
     if not committed("pairs"):
         pairs = stage_pairs(salted, cfg, url_dim=extracted.select("url"))
-        io.write("pairs", pairs, meta={"stage": "pairs"})
-        io.append_audit([{"stage": "pairs", "pair_count": io.read("pairs").count()}])
+        m = _observed_write(io, "pairs", pairs, pair_count=F.count(F.lit(1)))
+        io.append_audit([{"stage": "pairs", **m}])
     pairs = io.read("pairs")
 
     if not committed("attrs"):
-        io.write("attrs", stage_attrs(extracted), meta={"stage": "attrs"})
-        io.append_audit([{"stage": "attrs", "rows": io.read("attrs").count()}])
+        m = _observed_write(io, "attrs", stage_attrs(extracted), rows=F.count(F.lit(1)))
+        io.append_audit([{"stage": "attrs", **m}])
     attrs = io.read("attrs")
 
     if not committed("scored"):
         from ..operators.scoring import scoring_join_prefs
         with scoring_join_prefs(spark):
             scored = stage_scored(pairs, attrs, cfg)
-            io.write("scored", scored, meta={"stage": "scored"})
+            hist = _observed_write(io, "scored", scored, **_score_buckets())
         release_persisted(scored)
         io.append_audit([{
             "stage": "scored",
-            "score_histogram": _score_histogram(io.read("scored")),
+            "score_histogram": [
+                {"bucket": b, "count": hist[f"b{b}"]}
+                for b in range(_HIST_BUCKETS) if hist[f"b{b}"]],
         }])
     scored = io.read("scored")
 
@@ -235,11 +258,11 @@ def run_pipeline(
         if not resume:
             io.uncommit("cc_frontier")  # never resume a stale frontier
         clusters = stage_clusters(scored, extracted, cfg, io=io)
-        io.write("clusters", clusters, meta={"stage": "clusters"})
+        # a cluster id is its minimum member, so each cluster has exactly
+        # one row with url == cluster_id (observed metrics cannot DISTINCT)
+        m = _observed_write(io, "clusters", clusters, n_clusters=F.sum(
+            (F.col("url") == F.col("cluster_id")).cast("long")))
         release_persisted(clusters)  # final CC frontier checkpoint
         io.uncommit("cc_frontier")  # stage committed → frontier is stale
-        io.append_audit([{
-            "stage": "clusters",
-            "n_clusters": io.read("clusters").select("cluster_id").distinct().count(),
-        }])
+        io.append_audit([{"stage": "clusters", **m}])
     return io.read("clusters")

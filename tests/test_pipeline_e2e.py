@@ -104,3 +104,35 @@ def test_audit_lineage_rows(pipeline_run):
     assert blocks_row["n_keys"] > 0 and len(blocks_row["block_key_range"]) == 2
     scored_row = next(r for r in audit if r["stage"] == "scored")
     assert sum(b["count"] for b in scored_row["score_histogram"]) > 0
+
+
+def test_audit_counters_match_committed_tables(pipeline_run):
+    """The counters each stage's write job observed equal the values
+    recomputed from the committed tables."""
+    io, _ = pipeline_run
+    audit = {r["stage"]: r for r in io.read_audit()}
+    assert audit["extract"]["rows"] == io.read("extract").count()
+    assert audit["pairs"]["pair_count"] == io.read("pairs").count()
+    assert audit["attrs"]["rows"] == io.read("attrs").count()
+    bucket = F.least(F.floor(F.col("p_match") * 10), F.lit(9)).alias("bucket")
+    hist = io.read("scored").select(bucket).groupBy("bucket").count() \
+        .orderBy("bucket").collect()
+    assert audit["scored"]["score_histogram"] == [
+        {"bucket": int(r["bucket"]), "count": int(r["count"])} for r in hist]
+    assert audit["clusters"]["n_clusters"] == \
+        io.read("clusters").select("cluster_id").distinct().count()
+
+
+def test_observed_counters_leave_session_serializable(spark, pipeline_run):
+    """After a run's observed writes and CC checkpoints, a task closure that
+    captures the session still serializes: a fitted LogisticRegression
+    (which holds its training summary, and through it the session) can
+    score rows. Spark's Observation API breaks this."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    df = spark.range(40).select(F.col("id").cast("double").alias("x"),
+                                (F.col("id") % 2).cast("double").alias("label"))
+    data = VectorAssembler(inputCols=["x"], outputCol="v").transform(df)
+    model = LogisticRegression(featuresCol="v", maxIter=5).fit(data)
+    assert model.transform(data).count() == 40
